@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Batch-vs-stream correctness gates: replay a batch events frame
   * through the Structured Streaming operators (file source ->
@@ -27,14 +28,15 @@ import org.apache.spark.sql.streaming.Trigger
   * collect), and the temp source/checkpoint dirs are per-run unique so
   * replays are rerunnable and never share state.
   *
-  * Hygiene: every replay's temp source, sink, and checkpoint+state
-  * dirs are deleted before the replay returns — the result is
-  * materialized into executor blocks (`localCheckpoint`) first, so the
-  * returned frame never reads the deleted files. Without this a bench
-  * session accumulates runs x replays x 3 dirs of parquet and RocksDB
-  * state on the temp volume, and disk pressure is precisely what
-  * amplifies host-load noise into the 10-50x in-suite timing swings a
-  * shared host can produce.
+  * Hygiene: every replay runs in ONE `graft_replay_*` temp dir (source,
+  * sink or versioned state, and checkpoint+state inside it), deleted
+  * before the replay returns, whether it succeeded or failed — the
+  * result is materialized into executor blocks (`localCheckpoint`)
+  * first, so the returned frame never reads the deleted files. Without
+  * this a bench session accumulates one dir of parquet and RocksDB
+  * state per replay per run on the temp volume, and disk pressure is
+  * precisely what amplifies host-load noise into the 10-50x in-suite
+  * timing swings a shared host can produce.
   */
 object StreamGate {
 
@@ -100,24 +102,20 @@ object StreamGate {
     implicitly[Encoder[EventStream.Event]].schema
   }
 
-  /** Write `events` (event_id, ts, user_id, event_type, value) to a
-    * fresh dir and open it as a typed file stream. The write is
-    * coalesced so the replay fits ONE micro-batch: the source files
-    * are not time-ordered, and a multi-batch replay would advance the
-    * watermark between batches and drop later files' older rows as
-    * late data — breaking the exact batch equivalence this gate
-    * exists to prove. (A real deployment replays time-ordered files;
-    * see StreamBatchEquivalenceSpec for the multi-batch ordered case.) */
-  private def replayStream(events: DataFrame): (DataFrame, String) = {
-    val spark = events.sparkSession
-    val src = tempDir("graft_stream_src")
+  /** Write `events` (event_id, ts, user_id, event_type, value) to the
+    * replay source dir `src`. The write is coalesced so the replay
+    * fits ONE micro-batch: the source files are not time-ordered, and
+    * a multi-batch replay would advance the watermark between batches
+    * and drop later files' older rows as late data — breaking the
+    * exact batch equivalence this gate exists to prove. (A real
+    * deployment replays time-ordered files; see
+    * StreamBatchEquivalenceSpec for the multi-batch ordered case.) */
+  private def writeEvents(events: DataFrame, src: String): Unit =
     events.select("event_id", "ts", "user_id", "event_type", "value")
       .coalesce(16)
       .write.mode("overwrite").parquet(src)
-    (EventStream.readEventStream(spark, src, eventSchema(spark)), src)
-  }
 
-  /** [[replayStream]] with flush sentinels, in ONE corpus pass plus a
+  /** [[writeEvents]] with flush sentinels, in ONE corpus pass plus a
     * sentinel append: the newest real event time rides the source
     * WRITE as an observed metric (previously a separate full-scan
     * aggregate ran before the write could even be planned, because the
@@ -129,12 +127,9 @@ object StreamGate {
     * selects the per-key sentinel shape (one sentinel per user —
     * closes every per-key session/funnel) vs the single global
     * watermark-dragging sentinel. */
-  private def replayStreamSentineled(
-      events: DataFrame,
-      horizonUs: Long,
-      perKey: Boolean): (DataFrame, String) = {
+  private def writeSentineled(horizonUs: Long, perKey: Boolean)(
+      events: DataFrame, src: String): Unit = {
     val spark = events.sparkSession
-    val src = tempDir("graft_stream_src")
     val proj = events.select("event_id", "ts", "user_id", "event_type", "value")
     val obs = org.apache.spark.sql.Observation()
     proj.observe(obs, max(unix_micros(col("ts"))).as("__max"))
@@ -159,34 +154,15 @@ object StreamGate {
             lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
             lit(0.0).as("value"))
     sentinels.coalesce(1).write.mode("append").parquet(src)
-    (EventStream.readEventStream(spark, src, eventSchema(spark)), src)
   }
 
-  /** Drive a streaming frame to a parquet sink with AvailableNow and
-    * read the result back with the sink's own schema.
-    *
-    * The stream runs with `spark.sql.shuffle.partitions` scoped to
-    * [[replayPartitions]] — derived from the replayed source's bytes
-    * (restored right after): a stateful operator materializes one
-    * state-store instance per shuffle partition per micro-batch, and a
-    * single-node replay carrying KBs of state per partition pays pure
-    * per-store overhead at the session's partition count. The setting
-    * is captured into the query's fresh checkpoint at `start()`, so
-    * only this replay is affected; a production-sized replay keeps the
-    * session's own partition count (the deployment's deliberate
-    * choice) because the byte-derived target exceeds it. Batch queries never see the change (the replay drives
-    * the query to completion before restoring).
-    *
-    * The read-back is eagerly `localCheckpoint`ed — materialized into
-    * executor blocks — so the sink, checkpoint, and `srcDir` temp dirs
-    * can be deleted in the `finally` before the frame is handed back.
-    * ONE replay generation stays live: each replay releases the
-    * PREVIOUS replay's checkpoint blocks (the same superseded-
-    * generation discipline as [[graft.operators.Components]]), because
-    * waiting for the driver to GC the handle lets result blocks pile
-    * up across a bench suite — climbing block counts that the bench's
-    * own `cached_blocks` drift signal would then misread as an engine
-    * leak.
+  /** The live replay result. ONE replay generation stays live: each
+    * replay releases the PREVIOUS replay's checkpoint blocks (the same
+    * superseded-generation discipline as
+    * [[graft.operators.Components]]), because waiting for the driver
+    * to GC the handle lets result blocks pile up across a bench suite
+    * — climbing block counts that the bench's own `cached_blocks`
+    * drift signal would then misread as an engine leak.
     *
     * ==One-generation replay contract (all public replay* methods)==
     * A replay result is valid only until the NEXT replay runs on this
@@ -370,28 +346,143 @@ object StreamGate {
     next
   }
 
-  private def runToParquet(df: DataFrame, srcDir: String): DataFrame = {
-    val spark = df.sparkSession
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
+  /** The replay core: the one lifecycle every public replay runs.
+    *
+    *  1. One fresh `graft_replay_*` temp dir holds the replay's `src`,
+    *     `out` (sink or versioned state) and `ck` (checkpoint + state
+    *     store); `writeSource(src)` writes the replayed source.
+    *  1. `spark.sql.shuffle.partitions` is scoped to
+    *     [[replayPartitions]] of the written source's bytes.
+    *  1. `plan(src, out)` yields the configured stream writer and the
+    *     result's read-back; the query starts with `AvailableNow` once
+    *     the [[ProgressLedger]] is installed, and runs to completion.
+    *  1. The run's observability is published and the read-back is
+    *     released as the new live generation (see [[lastReplay]]).
+    *  1. The conf is restored and the dir deleted in the `finally`,
+    *     whichever step failed — so a failing argument check, source
+    *     write or query leaks neither the dir nor the scoped setting.
+    *
+    * Why scope the partitions: a stateful operator materializes one
+    * state-store instance per shuffle partition per micro-batch, and a
+    * single-node replay carrying KBs of state per partition pays pure
+    * per-store overhead at the session's partition count. The setting
+    * is captured into the query's fresh checkpoint at `start()`; a
+    * production-sized replay keeps the session's own partition count
+    * (the deployment's deliberate choice) because the byte-derived
+    * target exceeds it. The conf is SESSION-global, though: a batch
+    * query another thread runs on the same session while a replay is
+    * in flight plans with the replay's partition count. [[replayLock]]
+    * only serializes replays against each other, not against batch
+    * work.
+    *
+    * The read-back is eagerly `localCheckpoint`ed — materialized into
+    * executor blocks — so the temp dir can be deleted before the frame
+    * is handed back. */
+  private def replay(spark: SparkSession, writeSource: String => Unit)(
+      plan: (String, String) => (DataStreamWriter[Row], () => DataFrame))
+      : DataFrame = replayLock.synchronized {
+    val root = tempDir("graft_replay_")
+    val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, srcDir).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
     try {
-      val q = df.writeStream.format("parquet")
-        .option("path", out)
+      writeSource(src)
+      // a run that fires no micro-batch reads back an empty `out`
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+      spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
+      ProgressLedger.ensure(spark) // before start: the ledger must see every event
+      val (writer, readBack) = plan(src, out)
+      val q = writer
         .option("checkpointLocation", ck)
-        .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(df.schema).parquet(out).localCheckpoint())
+      releaseLastReplay(readBack().localCheckpoint())
     } finally {
       spark.conf.set(key, prev)
-      Seq(srcDir, out, ck).foreach(deleteRecursively)
+      deleteRecursively(root)
+    }
+  }
+
+  /** The source write of the non-event replays. */
+  private def writeFiles(source: DataFrame)(src: String): Unit =
+    source.coalesce(8).write.mode("overwrite").parquet(src)
+
+  /** `src`, written from `source` by [[writeFiles]], as a file stream
+    * of `source`'s schema, `filesPerTrigger` files per micro-batch. */
+  private def fileStream(
+      source: DataFrame, src: String, filesPerTrigger: Int): DataFrame =
+    source.sparkSession.readStream.schema(source.schema)
+      .option("maxFilesPerTrigger", filesPerTrigger)
+      .parquet(src)
+
+  /** Stateful parquet-sink shape (the [[EventStream]] twins): `write`
+    * writes the events' source, which is opened as a typed file stream
+    * and run through `op`; the result streams to a parquet sink and is
+    * read back with the sink's own schema. */
+  private def runToParquet(
+      events: DataFrame,
+      write: (DataFrame, String) => Unit = writeEvents)(
+      op: DataFrame => DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    replay(spark, write(events, _)) { (src, out) =>
+      val df = op(EventStream.readEventStream(spark, src, eventSchema(spark)))
+      (df.writeStream.format("parquet")
+          .option("path", out)
+          .outputMode("append"),
+        () => spark.read.schema(df.schema).parquet(out))
+    }
+  }
+
+  /** Per-batch append shape (the static-side gates and the summing
+    * monitors): `source` is the written file source, each micro-batch's
+    * `perBatch` frame is appended under `out`, and `readBack(out)` is
+    * the result. */
+  private def replayPerBatch(source: DataFrame, filesPerTrigger: Int)(
+      perBatch: DataFrame => DataFrame)(
+      readBack: String => DataFrame): DataFrame = {
+    val spark = source.sparkSession
+    replay(spark, writeFiles(source)) { (src, out) =>
+      (fileStream(source, src, filesPerTrigger).writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            perBatch(batch).write.mode("append").parquet(out)
+          },
+        () => readBack(out))
+    }
+  }
+
+  /** Versioned state owned OUTSIDE the query (the q133 discipline):
+    * each micro-batch reads version N and commits N+1 under `root` as a
+    * parquet artifact — never overwriting what it reads — so no
+    * stream-stateful operator holds the state and a restart resumes
+    * from the last committed version. */
+  private final class VersionedState(root: String) {
+    private val current =
+      new java.util.concurrent.atomic.AtomicReference[String](null)
+    private val version = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    def latest: Option[String] = Option(current.get())
+
+    /** Write `df` as the next version. */
+    def commit(df: DataFrame): Unit = {
+      val next = s"$root/v${version.incrementAndGet()}"
+      df.write.mode("overwrite").parquet(next)
+      current.set(next)
+    }
+
+    /** Commit `delta` merged into the latest version by `fold` (or
+      * `delta` itself as the first version). */
+    def foldIn(delta: DataFrame)(
+        fold: (DataFrame, DataFrame) => DataFrame): Unit =
+      commit(latest.fold(delta)(p =>
+        fold(delta.sparkSession.read.parquet(p), delta)))
+
+    /** The final version's path; a run that folded nothing fails,
+      * naming the replay. */
+    def last(replayName: String): String = {
+      require(current.get() != null, s"$replayName saw no micro-batches")
+      current.get()
     }
   }
 
@@ -399,25 +490,23 @@ object StreamGate {
     * session closes (per-key sentinels) and comes back as a batch
     * frame of Session rows.
     * @note one-generation replay contract — see the object doc. */
-  def replaySessionize(events: DataFrame, gapUs: Long): DataFrame = replayLock.synchronized {
+  def replaySessionize(events: DataFrame, gapUs: Long): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (streamDf, src) = replayStreamSentineled(events, 2 * gapUs, perKey = true)
-    val stream = streamDf.as[EventStream.Event]
-    runToParquet(EventStream.sessionizeStream(stream, gapUs).toDF(), src)
+    runToParquet(events, writeSentineled(2 * gapUs, perKey = true))(stream =>
+      EventStream.sessionizeStream(stream.as[EventStream.Event], gapUs).toDF())
   }
 
   /** Replay through [[EventStream.funnelStream]]: completed funnels
     * emit on their final step; per-key sentinels flush every partial
     * funnel, so the replay returns exactly the batch funnel's rows.
     * @note one-generation replay contract — see the object doc. */
-  def replayFunnel(events: DataFrame, steps: Seq[String]): DataFrame = replayLock.synchronized {
+  def replayFunnel(events: DataFrame, steps: Seq[String]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (streamDf, src) = replayStreamSentineled(events,
-      horizonUs = 3600L * 1000000L, perKey = true)
-    val stream = streamDf.as[EventStream.Event]
-    runToParquet(EventStream.funnelStream(stream, steps).toDF(), src)
+    runToParquet(events,
+        writeSentineled(horizonUs = 3600L * 1000000L, perKey = true))(stream =>
+      EventStream.funnelStream(stream.as[EventStream.Event], steps).toDF())
   }
 
   /** Replay through [[EventStream.windowedCounts]]: the global
@@ -430,11 +519,10 @@ object StreamGate {
       windowDur: String,
       slide: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    runToParquet(EventStream.windowedCounts(stream, windowDur, slide, watermark), src)
+      horizonUs: Long): DataFrame =
+    runToParquet(events, writeSentineled(horizonUs, perKey = false))(
+      EventStream.windowedCounts(_, windowDur, slide, watermark))
       .filter(col("event_type") =!= "__sentinel")
-  }
 
   /** Replay through [[EventStream.intervalJoinStream]]: a stream
     * SELF-join (both sides read the same replayed file source) of
@@ -446,14 +534,11 @@ object StreamGate {
       typeA: String,
       typeB: String,
       maxGap: String,
-      watermark: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.intervalJoinStream(
+      watermark: String): DataFrame =
+    runToParquet(events)(stream => EventStream.intervalJoinStream(
       stream.filter(col("event_type") === typeA),
       stream.filter(col("event_type") === typeB),
-      maxGap, watermark), src)
-  }
+      maxGap, watermark))
 
   /** Replay through [[EventStream.leftOuterIntervalJoinStream]]: the
     * left-outer twin of [[replayIntervalJoin]]. Outer (null-side)
@@ -470,12 +555,7 @@ object StreamGate {
       typeB: String,
       maxGap: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    val joined = EventStream.leftOuterIntervalJoinStream(
-      stream.filter(col("event_type").isin(typeA, "__sentinel")),
-      stream.filter(col("event_type").isin(typeB, "__sentinel")),
-      maxGap, watermark)
+      horizonUs: Long): DataFrame = {
     // The sentinel's own row is dropped AFTER the sink, batch-side
     // (the replayWindowedCounts pattern): filtering `left_type` inside
     // the STREAMING plan would be a left-side predicate on a left
@@ -485,7 +565,11 @@ object StreamGate {
     // stall at the real data and the newest unmatched rows would
     // never flush. Found the hard way; pinned by the left-outer
     // stream==batch spec.
-    runToParquet(joined, src)
+    runToParquet(events, writeSentineled(horizonUs, perKey = false))(stream =>
+      EventStream.leftOuterIntervalJoinStream(
+        stream.filter(col("event_type").isin(typeA, "__sentinel")),
+        stream.filter(col("event_type").isin(typeB, "__sentinel")),
+        maxGap, watermark))
       .filter(col("left_type") =!= "__sentinel")
       .drop("left_type")
   }
@@ -499,11 +583,9 @@ object StreamGate {
       dim: DataFrame,
       streamKey: String,
       dimKey: String,
-      dimCols: Seq[(String, String)]): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.enrichStream(stream, dim, streamKey, dimKey, dimCols), src)
-  }
+      dimCols: Seq[(String, String)]): DataFrame =
+    runToParquet(events)(
+      EventStream.enrichStream(_, dim, streamKey, dimKey, dimCols))
 
   /** Replay through [[EventStream.excludeKnownStream]]: stateless
     * stream-static anti join, so no sentinel and no watermark — every
@@ -513,11 +595,9 @@ object StreamGate {
       events: DataFrame,
       known: DataFrame,
       streamKey: String,
-      knownKey: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.excludeKnownStream(stream, known, streamKey, knownKey), src)
-  }
+      knownKey: String): DataFrame =
+    runToParquet(events)(
+      EventStream.excludeKnownStream(_, known, streamKey, knownKey))
 
   /** Replay through [[EventStream.dedupStream]]: one surviving row per
     * distinct key (all data lands inside the watermark horizon of a
@@ -527,11 +607,9 @@ object StreamGate {
   def replayDedup(
       events: DataFrame,
       keyCols: Seq[String],
-      watermark: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.dedupStream(stream, keyCols, watermark = watermark), src)
-  }
+      watermark: String): DataFrame =
+    runToParquet(events)(
+      EventStream.dedupStream(_, keyCols, watermark = watermark))
 
   /** Replay through [[EventStream.topUsersPerWindowStream]]: the
     * global sentinel closes every real window through BOTH chained
@@ -544,12 +622,9 @@ object StreamGate {
       k: Int,
       windowDur: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    runToParquet(
-      EventStream.topUsersPerWindowStream(stream, k, windowDur, watermark),
-      src)
-  }
+      horizonUs: Long): DataFrame =
+    runToParquet(events, writeSentineled(horizonUs, perKey = false))(
+      EventStream.topUsersPerWindowStream(_, k, windowDur, watermark))
 
   /** STREAMING near-dup ingestion gate: a document stream is
     * micro-batched into shards (`maxFilesPerTrigger` bounds each
@@ -585,38 +660,11 @@ object StreamGate {
       bands: Int = 0, // 0 = auto-tune (Dedup.lshPlan) per the batch default
       threshold: Double = 0.5,
       maxBucket: Int = 1000,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_docs_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Dedup.dropNearDupsOfLedger(batch, idCol, textCol,
-              ledger, shingleN, numHashes, bands, threshold, maxBucket)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(docs.schema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayPerBatch(docs, filesPerTrigger)(
+      graft.operators.Dedup.dropNearDupsOfLedger(_, idCol, textCol,
+        ledger, shingleN, numHashes, bands, threshold, maxBucket))(
+      docs.sparkSession.read.schema(docs.schema).parquet(_))
 
   /** Streaming EXACT-substring ingestion firewall — the verbatim-leak
     * twin of [[replayNearDupGate]]: each micro-batch of arriving
@@ -642,52 +690,29 @@ object StreamGate {
       minTokens: Int,
       maxPositionsPerGram: Int = 10000,
       filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_docs_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     // The benchmark corpus is FROZEN for this gate's lifetime, so its
     // tokenized docs and count-first-guarded anchor table are built and
-    // materialized ONCE (under the session's own parallelism, before
-    // the replay-scoped partition override) — the previous per-batch
-    // dropExactSubstringMatches call re-tokenized, re-hashed and
-    // re-guarded the whole benchmark on EVERY trigger for a side that
-    // cannot change. Benchmark suites are the small side of a
-    // decontamination join by construction, so the checkpoint is
-    // eval-corpus-bounded.
+    // materialized ONCE (under the session's own parallelism — the
+    // lock keeps any other replay's scoped setting out — before the
+    // replay-scoped partition override, and before any temp dir
+    // exists, so an argument or guard failure here leaves nothing
+    // behind) — the previous per-batch dropExactSubstringMatches call
+    // re-tokenized, re-hashed and re-guarded the whole benchmark on
+    // EVERY trigger for a side that cannot change. Benchmark suites are
+    // the small side of a decontamination join by construction, so the
+    // checkpoint is eval-corpus-bounded.
     val (bdocs0, banch0) = graft.operators.Corpus.substringAnchorSide(
       benchmark, benchIdCol, benchTextCol, "left", minTokens,
       maxPositionsPerGram)
     val bdocs = bdocs0.localCheckpoint()
     val banch = banch0.localCheckpoint()
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Corpus.dropExactSubstringMatchesAgainstIndex(
-              batch, idCol, textCol, bdocs, banch, minTokens,
-              maxPositionsPerGram)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(docs.schema).parquet(out).localCheckpoint())
-    } finally {
+    try replayPerBatch(docs, filesPerTrigger)(
+        graft.operators.Corpus.dropExactSubstringMatchesAgainstIndex(
+          _, idCol, textCol, bdocs, banch, minTokens, maxPositionsPerGram))(
+        docs.sparkSession.read.schema(docs.schema).parquet(_))
+    finally {
       graft.operators.Blocks.release(bdocs)
       graft.operators.Blocks.release(banch)
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
     }
   }
 
@@ -712,51 +737,21 @@ object StreamGate {
       nFrames: Int = 8,
       frameBytes: Int = 16,
       maxHamming: Int = 8,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = media.sparkSession
-    val src = tempDir("graft_media_src")
-    media.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("media_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_frames",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_boundaries",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("boundary_frames",
-        org.apache.spark.sql.types.StringType)))
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Multimodal
-            .shotBoundaries(batch, nFrames, frameBytes, maxHamming)
-            .select(col("media_id").cast("long"),
-              col("n_frames").cast("long"),
-              col("n_boundaries").cast("long"),
-              array_join(transform(col("boundary_frames"),
-                i => i.cast("string")), ",").as("boundary_frames"))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(outSchema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+      filesPerTrigger: Int = 2): DataFrame = {
+    val outSchema = StructType(Seq(
+      StructField("media_id", LongType),
+      StructField("n_frames", LongType),
+      StructField("n_boundaries", LongType),
+      StructField("boundary_frames", StringType)))
+    replayPerBatch(media, filesPerTrigger)(batch =>
+      graft.operators.Multimodal
+        .shotBoundaries(batch, nFrames, frameBytes, maxHamming)
+        .select(col("media_id").cast("long"),
+          col("n_frames").cast("long"),
+          col("n_boundaries").cast("long"),
+          array_join(transform(col("boundary_frames"),
+            i => i.cast("string")), ",").as("boundary_frames")))(
+      media.sparkSession.read.schema(outSchema).parquet(_))
   }
 
   /** Streaming PII monitor: the document feed micro-batched, each
@@ -780,47 +775,20 @@ object StreamGate {
       textCol: String,
       patterns: Seq[(String, String)] =
         graft.operators.Quality.defaultPiiPatterns,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_pii_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
+      filesPerTrigger: Int = 2): DataFrame = {
     val catCols = patterns.map { case (cat, _) => s"${cat}_hits" }
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Quality.piiScan(batch, idCol, textCol, patterns)
-            .agg(count(lit(1)).as("n_docs"),
-              catCols.map(c => sum(col(c)).as(c)) ++ Seq(
-                sum(col("pii_total")).as("pii_total"),
-                sum(when(col("has_pii"), 1L).otherwise(0L))
-                  .as("n_flagged")): _*)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      val perBatch = spark.read.parquet(out)
-      releaseLastReplay(perBatch
+    replayPerBatch(docs, filesPerTrigger)(batch =>
+      graft.operators.Quality.piiScan(batch, idCol, textCol, patterns)
+        .agg(count(lit(1)).as("n_docs"),
+          catCols.map(c => sum(col(c)).as(c)) ++ Seq(
+            sum(col("pii_total")).as("pii_total"),
+            sum(when(col("has_pii"), 1L).otherwise(0L))
+              .as("n_flagged")): _*))(out =>
+      docs.sparkSession.read.parquet(out)
         .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
           catCols.map(c => coalesce(sum(col(c)), lit(0L)).as(c)) ++ Seq(
             coalesce(sum(col("pii_total")), lit(0L)).as("pii_total"),
-            coalesce(sum(col("n_flagged")), lit(0L)).as("n_flagged")): _*)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+            coalesce(sum(col("n_flagged")), lit(0L)).as("n_flagged")): _*))
   }
 
   /** Streaming fingerprint monitor — integrity at INGEST: each
@@ -838,41 +806,14 @@ object StreamGate {
   def replayFingerprintMonitor(
       df: DataFrame,
       cols: Seq[String],
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_fp_src")
-    df.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Quality.tableFingerprint(batch, cols)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(spark.read.parquet(out)
+      filesPerTrigger: Int = 2): DataFrame =
+    replayPerBatch(df, filesPerTrigger)(
+      graft.operators.Quality.tableFingerprint(_, cols))(out =>
+      df.sparkSession.read.parquet(out)
         .agg(coalesce(sum(col("n_rows")), lit(0L)).as("n_rows"),
           coalesce(sum(col("fingerprint")),
             lit(0).cast("decimal(38,0)")).cast("decimal(38,0)")
-            .as("fingerprint"))
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
-  }
+            .as("fingerprint")))
 
   /** Streaming incremental aggregate maintenance: the fact feed
     * micro-batched into shards (`maxFilesPerTrigger`), each batch
@@ -897,48 +838,11 @@ object StreamGate {
       facts: DataFrame,
       keys: Seq[String],
       spec: graft.operators.Maintain.SummarySpec,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_facts_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_rollup_state")
-    val ck = tempDir("graft_rollup_ck")
-    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val batchSummary =
-            graft.operators.Maintain.summarize(batch, keys, spec)
-          val merged = Option(current.get()) match {
-            case None => batchSummary
-            case Some(p) => graft.operators.Maintain.merge(
-              spark.read.parquet(p), batchSummary, keys, spec)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          current.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(current.get() != null,
-        "replayIncrementalRollup saw no micro-batches")
-      releaseLastReplay(spark.read.parquet(current.get()).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(facts, "replayIncrementalRollup", filesPerTrigger)(
+      graft.operators.Maintain.summarize(_, keys, spec),
+      graft.operators.Maintain.merge(_, _, keys, spec),
+      state => state)
 
   /** Streaming distinct-count maintenance — [[graft.operators
     * .Maintain.distinctSummarize]]'s HLL rollup with the fact feed as
@@ -960,49 +864,11 @@ object StreamGate {
       facts: DataFrame,
       keys: Seq[String],
       valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_dfacts_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_distinct_state")
-    val ck = tempDir("graft_distinct_ck")
-    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val batchSummary = graft.operators.Maintain
-            .distinctSummarize(batch, keys, valueCol)
-          val merged = Option(current.get()) match {
-            case None => batchSummary
-            case Some(p) => graft.operators.Maintain.distinctMerge(
-              spark.read.parquet(p), batchSummary, keys, valueCol)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          current.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(current.get() != null,
-        "replayDistinctRollup saw no micro-batches")
-      releaseLastReplay(graft.operators.Maintain.distinctEstimate(
-        spark.read.parquet(current.get()), valueCol).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(facts, "replayDistinctRollup", filesPerTrigger)(
+      graft.operators.Maintain.distinctSummarize(_, keys, valueCol),
+      graft.operators.Maintain.distinctMerge(_, _, keys, valueCol),
+      graft.operators.Maintain.distinctEstimate(_, valueCol))
 
   /** Streaming exact-KS drift — [[graft.operators.Profile
     * .ksStatistic]] with the monitored slice as a FILE STREAM: each
@@ -1020,7 +886,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "ks", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayKsDrift",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("v").agg(sum(col("cb")).as("cb")),
@@ -1044,7 +911,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "w1", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayWassersteinDrift",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("v").agg(sum(col("cb")).as("cb")),
@@ -1068,7 +936,8 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "qshift", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayQuantileShift",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
       graft.operators.Profile.foldValueCounts,
       state => graft.operators.Profile.quantileShiftFromCounts(
@@ -1092,8 +961,8 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gqshift",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupQuantileShift", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1118,7 +987,7 @@ object StreamGate {
       keyCol: String,
       idCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(keyCol, idCol), "keydedup",
+    replayFoldState(monitored.select(keyCol, idCol), "replayKeyDedupMonitor",
         filesPerTrigger)(
       batch => graft.operators.Dedup.exactDedupIds(batch, Seq(keyCol), idCol),
       (base, delta) => graft.operators.Dedup.exactDedupIds(
@@ -1143,8 +1012,8 @@ object StreamGate {
       durationCol: String,
       observedCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(durationCol, observedCol), "km",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(durationCol, observedCol),
+        "replayKaplanMeierMonitor", filesPerTrigger)(
       batch => graft.operators.Events.survivalCellsOf(
         batch, durationCol, observedCol),
       graft.operators.Events.foldSurvivalCells,
@@ -1165,7 +1034,8 @@ object StreamGate {
       groupCol: String,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, c), "gjsd", filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, c), "replayGroupJsDivergence",
+        filesPerTrigger)(
       batch => graft.operators.Profile.groupCatCounts(
         batch, groupCol, c, "cnt"),
       graft.operators.Profile.foldGroupCatCounts,
@@ -1190,7 +1060,8 @@ object StreamGate {
       groupCol: String,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, c), "ghell", filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, c), "replayGroupHellinger",
+        filesPerTrigger)(
       batch => graft.operators.Profile.groupCatCounts(
         batch, groupCol, c, "cnt"),
       graft.operators.Profile.foldGroupCatCounts,
@@ -1213,7 +1084,7 @@ object StreamGate {
       monitored: DataFrame,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(c), "hell", filesPerTrigger)(
+    replayFoldState(monitored.select(c), "replayHellinger", filesPerTrigger)(
       batch => graft.operators.Profile.catSideCounts(batch, c, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("category").agg(sum(col("cb")).as("cb")),
@@ -1239,8 +1110,8 @@ object StreamGate {
       bucketCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(bucketCol, valueCol), "cpt",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(bucketCol, valueCol),
+        "replayChangePointMonitor", filesPerTrigger)(
       batch => batch.filter(col(valueCol).isNotNull)
         .groupBy(bucketCol)
         .agg(sum(round(col(valueCol), 12).cast("decimal(38,12)"))
@@ -1268,7 +1139,7 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gks",
+    replayFoldState(monitored.select(groupCol, valueCol), "replayGroupKsDrift",
         filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
@@ -1294,8 +1165,8 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gw1",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupWassersteinDrift", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1318,8 +1189,8 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gmwu",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupMannWhitney", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1343,7 +1214,7 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gcvm",
+    replayFoldState(monitored.select(groupCol, valueCol), "replayGroupCvmDrift",
         filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
@@ -1367,7 +1238,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "mwu", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayMannWhitney",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("v").agg(sum(col("cb")).as("cb")),
@@ -1389,7 +1261,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "cvm", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayCvmDrift",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("v").agg(sum(col("cb")).as("cb")),
@@ -1412,7 +1285,7 @@ object StreamGate {
       monitored: DataFrame,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(c), "jsd", filesPerTrigger)(
+    replayFoldState(monitored.select(c), "replayJsDivergence", filesPerTrigger)(
       batch => graft.operators.Profile.catSideCounts(batch, c, "cb"),
       (base, delta) => base.unionByName(delta)
         .groupBy("category").agg(sum(col("cb")).as("cb")),
@@ -1420,65 +1293,31 @@ object StreamGate {
         graft.operators.Profile.catSideCounts(reference, c, "ca"),
         state))
 
-  /** Shared skeleton of the versioned fold-state monitors (quantile /
-    * association / bootstrap-CI): write the projected feed as a file
-    * source, stream it micro-batched, reduce each batch with `seed`,
-    * merge into the prior state with `fold` (state version N → N+1 as
-    * parquet artifacts — the q133 discipline: the state is owned
-    * OUTSIDE the query, no stream-stateful operator holds it), then
-    * run `readout` over the final state. Correctness burden on the
-    * caller: `fold` must be associative and commutative over `seed`
-    * outputs (every monitor built on this proves it by being held to
-    * its batch twin's verbatim oracle).
+  /** Versioned fold-state shape (the rollups and the quantile /
+    * drift / association / bootstrap-CI monitors): `projected` is the
+    * written file source, each micro-batch is reduced with `seed` and
+    * merged into the prior [[VersionedState]] version with `fold`, and
+    * `readout` over the final version is the result. Correctness burden
+    * on the caller: `fold` must be associative and commutative over
+    * `seed` outputs (every replay built on this proves it by being held
+    * to its batch twin's verbatim oracle). A run that folds no
+    * micro-batch fails, naming `replayName`.
     * @note one-generation replay contract — see the object doc. */
   private def replayFoldState(
-      source: DataFrame,
-      sourceCols: Seq[String],
-      tag: String,
+      projected: DataFrame,
+      replayName: String,
       filesPerTrigger: Int)(
       seed: DataFrame => DataFrame,
       fold: (DataFrame, DataFrame) => DataFrame,
-      readout: DataFrame => DataFrame): DataFrame = replayLock.synchronized {
-    val spark = source.sparkSession
-    val src = tempDir(s"graft_${tag}_src")
-    val projected = source.select(sourceCols.map(col): _*)
-    projected.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir(s"graft_${tag}_state")
-    val ck = tempDir(s"graft_${tag}_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream
-        .schema(projected.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = seed(batch)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => fold(spark.read.parquet(p), bh)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        s"fold-state monitor '$tag' saw no micro-batches")
-      releaseLastReplay(readout(spark.read.parquet(state.get()))
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
+      readout: DataFrame => DataFrame): DataFrame = {
+    val spark = projected.sparkSession
+    replay(spark, writeFiles(projected)) { (src, out) =>
+      val state = new VersionedState(out)
+      (fileStream(projected, src, filesPerTrigger).writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            state.foldIn(seed(batch))(fold)
+          },
+        () => readout(spark.read.parquet(state.last(replayName))))
     }
   }
 
@@ -1498,7 +1337,8 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "qtl", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayQuantileMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
       graft.operators.Profile.foldValueCounts,
       state => graft.operators.Profile.exactQuantilesFromCounts(state, ps))
@@ -1521,8 +1361,8 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gqtl",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupQuantileMonitor", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1546,8 +1386,8 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "ggini",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupGiniMonitor", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1571,7 +1411,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "gini", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayGiniMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
       graft.operators.Profile.foldValueCounts,
       state => graft.operators.Stats.giniFromCounts(state))
@@ -1591,7 +1432,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "hhi", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayHhiMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
       graft.operators.Profile.foldValueCounts,
       state => graft.operators.Stats.hhiFromCounts(state))
@@ -1613,7 +1455,8 @@ object StreamGate {
       colA: String,
       colB: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(rows, Seq(colA, colB), "assoc", filesPerTrigger)(
+    replayFoldState(rows.select(colA, colB), "replayAssociationMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Profile.jointCountsOf(batch, colA, colB),
       graft.operators.Profile.foldJointCounts,
       state => graft.operators.Profile.associationFromJoint(state))
@@ -1636,7 +1479,8 @@ object StreamGate {
       xCol: String,
       yCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(xCol, yCol), "mom", filesPerTrigger)(
+    replayFoldState(monitored.select(xCol, yCol), "replayMomentsMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Moments.momentState(batch, xCol, yCol),
       graft.operators.Moments.foldMomentState,
       state => graft.operators.Moments.bivariateFromMoments(state))
@@ -1656,8 +1500,8 @@ object StreamGate {
       xCol: String,
       yCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, xCol, yCol), "gmom",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, xCol, yCol),
+        "replayGroupMomentsMonitor", filesPerTrigger)(
       batch => graft.operators.Moments.groupMomentState(
         batch, groupCol, xCol, yCol),
       graft.operators.Moments.foldGroupMomentState,
@@ -1679,8 +1523,8 @@ object StreamGate {
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "fleiss",
-        filesPerTrigger)(
+    replayFoldState(ratings.select(itemCol, raterCol, labelCol),
+        "replayFleissMonitor", filesPerTrigger)(
       batch => graft.operators.Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayFleissMonitor"),
       graft.operators.Annotate.foldAnnotationCells,
@@ -1701,8 +1545,8 @@ object StreamGate {
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "alpha",
-        filesPerTrigger)(
+    replayFoldState(ratings.select(itemCol, raterCol, labelCol),
+        "replayAlphaMonitor", filesPerTrigger)(
       batch => graft.operators.Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayAlphaMonitor"),
       graft.operators.Annotate.foldAnnotationCells,
@@ -1722,7 +1566,8 @@ object StreamGate {
       docs: DataFrame,
       textCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(docs, Seq(textCol), "vocabrich", filesPerTrigger)(
+    replayFoldState(docs.select(textCol), "replayVocabRichnessMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Corpus.tokenFrequencies(batch, textCol),
       graft.operators.Corpus.foldTokenFrequencies,
       state => graft.operators.Corpus.vocabRichnessFromFrequencies(state))
@@ -1737,7 +1582,7 @@ object StreamGate {
       groupCol: String,
       textCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(docs, Seq(groupCol, textCol), "gvocab",
+    replayFoldState(docs.select(groupCol, textCol), "replayGroupVocabMonitor",
         filesPerTrigger)(
       batch => graft.operators.Corpus.groupTokenFrequencies(
         batch, groupCol, textCol),
@@ -1760,8 +1605,8 @@ object StreamGate {
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "consensus",
-        filesPerTrigger)(
+    replayFoldState(ratings.select(itemCol, raterCol, labelCol),
+        "replayConsensusMonitor", filesPerTrigger)(
       batch => graft.operators.Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayConsensusMonitor"),
       graft.operators.Annotate.foldAnnotationCells,
@@ -1782,8 +1627,8 @@ object StreamGate {
       lo: Double = 0.0,
       hi: Double = 1.0,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(scored, Seq(groupCol, labelCol, scoreCol), "gcalib",
-        filesPerTrigger)(
+    replayFoldState(scored.select(groupCol, labelCol, scoreCol),
+        "replayGroupCalibrationMonitor", filesPerTrigger)(
       batch => graft.operators.Eval.groupCalibStateOf(
         batch, groupCol, labelCol, scoreCol, bins, lo, hi),
       graft.operators.Eval.foldGroupCalibState,
@@ -1803,8 +1648,8 @@ object StreamGate {
       loserCol: String,
       z: Double = 1.96,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(comparisons, Seq(winnerCol, loserCol), "winmat",
-        filesPerTrigger)(
+    replayFoldState(comparisons.select(winnerCol, loserCol),
+        "replayWinMatrixMonitor", filesPerTrigger)(
       batch => graft.operators.Preference.winCountsOf(
         batch, winnerCol, loserCol, "replayWinMatrixMonitor"),
       graft.operators.Preference.foldWinCounts,
@@ -1826,8 +1671,8 @@ object StreamGate {
       loserCol: String,
       iters: Int = 25,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(comparisons, Seq(winnerCol, loserCol), "btlead",
-        filesPerTrigger)(
+    replayFoldState(comparisons.select(winnerCol, loserCol),
+        "replayLeaderboardMonitor", filesPerTrigger)(
       batch => graft.operators.Preference.winCountsOf(
         batch, winnerCol, loserCol, "replayLeaderboardMonitor"),
       graft.operators.Preference.foldWinCounts,
@@ -1850,8 +1695,8 @@ object StreamGate {
       lo: Double = 0.0,
       hi: Double = 1.0,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(scored, Seq(labelCol, scoreCol), "calib",
-        filesPerTrigger)(
+    replayFoldState(scored.select(labelCol, scoreCol),
+        "replayCalibrationMonitor", filesPerTrigger)(
       batch => graft.operators.Eval.calibStateOf(
         batch, labelCol, scoreCol, bins, lo, hi),
       graft.operators.Eval.foldCalibState,
@@ -1869,8 +1714,8 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "ghhi",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupHhiMonitor", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1888,8 +1733,8 @@ object StreamGate {
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gtheil",
-        filesPerTrigger)(
+    replayFoldState(monitored.select(groupCol, valueCol),
+        "replayGroupTheilMonitor", filesPerTrigger)(
       batch => graft.operators.Profile.groupSideCounts(
         batch, groupCol, valueCol),
       graft.operators.Profile.foldGroupValueCounts,
@@ -1908,7 +1753,8 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "theil", filesPerTrigger)(
+    replayFoldState(monitored.select(valueCol), "replayTheilMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
       graft.operators.Profile.foldValueCounts,
       state => graft.operators.Stats.theilFromCounts(state))
@@ -1931,8 +1777,8 @@ object StreamGate {
       colA: String,
       colB: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(rows, Seq(groupCol, colA, colB), "gassoc",
-        filesPerTrigger)(
+    replayFoldState(rows.select(groupCol, colA, colB),
+        "replayGroupAssociationMonitor", filesPerTrigger)(
       batch => graft.operators.Profile.groupJointCountsOf(
         batch, groupCol, colA, colB),
       graft.operators.Profile.foldGroupJointCounts,
@@ -1963,7 +1809,8 @@ object StreamGate {
       alpha: Double = 0.05,
       salt: String = "boot",
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(outcomes, Seq(valueCol, idCol), "boot", filesPerTrigger)(
+    replayFoldState(outcomes.select(valueCol, idCol), "replayBootstrapMonitor",
+        filesPerTrigger)(
       batch => graft.operators.Stats.bootPartialsOf(
         batch, valueCol, idCol, nBoot, salt),
       graft.operators.Stats.foldBootPartials,
@@ -1991,8 +1838,8 @@ object StreamGate {
       alpha: Double = 0.05,
       salt: String = "boot",
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(outcomes, Seq(groupCol, valueCol, idCol), "gboot",
-        filesPerTrigger)(
+    replayFoldState(outcomes.select(groupCol, valueCol, idCol),
+        "replayGroupBootstrapMonitor", filesPerTrigger)(
       batch => graft.operators.Stats.groupBootPartialsOf(
         batch, groupCol, valueCol, idCol, nBoot, salt),
       graft.operators.Stats.foldBootPartials,
@@ -2023,40 +1870,14 @@ object StreamGate {
       dimKey: String,
       validFrom: String,
       validTo: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_scd_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_scd_out")
-    val ck = tempDir("graft_scd_ck")
+      filesPerTrigger: Int = 2): DataFrame = {
     // the enriched schema, read off the batch plan without executing it
     val outSchema = graft.operators.AsOfJoin.scdJoin(
       facts.limit(0), factKey, factTime, dim, dimKey, validFrom, validTo).schema
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.AsOfJoin.scdJoin(batch, factKey, factTime,
-              dim, dimKey, validFrom, validTo)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(outSchema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+    replayPerBatch(facts, filesPerTrigger)(
+      graft.operators.AsOfJoin.scdJoin(_, factKey, factTime,
+        dim, dimKey, validFrom, validTo))(
+      facts.sparkSession.read.schema(outSchema).parquet(_))
   }
 
   /** Streaming experiment monitor — [[graft.operators.Experiment
@@ -2076,66 +1897,40 @@ object StreamGate {
       flagCol: String,
       controlArm: String,
       zThreshold: Double = 1.96,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = outcomes.sparkSession
-    val src = tempDir("graft_ab_src")
-    // mirror the batch operator's input contract: NULL arms/flags are
-    // excluded there, and the replay's fixed read schema is
-    // (string, boolean) — cast explicitly so a typed arm column
-    // cannot silently break stream==batch parity
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(abSource(outcomes, armCol, flagCol), "replayAbMonitor",
+        filesPerTrigger)(
+      armCounts,
+      foldArmCounts,
+      state => graft.operators.Experiment.abReportFromCI(
+        graft.operators.Quality.passRateCIFromCounts(
+          state, Seq("arm"), zThreshold),
+        controlArm, zThreshold))
+
+  /** The A/B replays' source: NULL arms/flags are excluded, mirroring
+    * the batch operators' input contract (a NULL arm would reach the
+    * readout and break stream==batch parity), and the columns are cast
+    * to the fixed (`arm` string, `flag` boolean) read schema, so a
+    * typed arm column cannot silently break parity either. */
+  private def abSource(
+      outcomes: DataFrame, armCol: String, flagCol: String): DataFrame =
     outcomes
       .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
       .select(col(armCol).cast("string").as("arm"),
         col(flagCol).cast("boolean").as("flag"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_ab_state")
-    val ck = tempDir("graft_ab_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("arm",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("flag",
-          org.apache.spark.sql.types.BooleanType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy("arm")
-            .agg(count(col("flag")).as("n"),
-              sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("arm")
-              .agg(sum(col("n")).cast("long").as("n"),
-                sum(col("n_pass")).cast("long").as("n_pass"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null, "replayAbMonitor saw no micro-batches")
-      val ci = graft.operators.Quality.passRateCIFromCounts(
-        spark.read.parquet(state.get()), Seq("arm"), zThreshold)
-      releaseLastReplay(graft.operators.Experiment
-        .abReportFromCI(ci, controlArm, zThreshold).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+
+  /** Per-arm (`n`, `n_pass`) counts of one micro-batch. */
+  private def armCounts(batch: DataFrame): DataFrame =
+    batch.groupBy("arm")
+      .agg(count(col("flag")).as("n"),
+        sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
+
+  /** Per-arm counts merge by SUM. */
+  private def foldArmCounts(base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta)
+      .groupBy("arm")
+      .agg(sum(col("n")).cast("long").as("n"),
+        sum(col("n_pass")).cast("long").as("n_pass"))
 
   /** Streaming SEQUENTIAL experiment monitor — the always-valid
     * (mSPRT) p-value LOOKED AT after every micro-batch, which is safe
@@ -2164,90 +1959,47 @@ object StreamGate {
       controlArm: String,
       tau: Double = 0.1,
       alpha: Double = 0.05,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
+      filesPerTrigger: Int = 2): DataFrame = {
     val spark = outcomes.sparkSession
-    val src = tempDir("graft_seqab_src")
-    // the batch sequentialAbReport filters NULL arms/flags before
-    // counting — mirror it here (a NULL arm would reach
-    // sequentialAbFromCounts and break the stream==batch parity) and
-    // cast to the replay's fixed (string, boolean) read schema
-    outcomes
-      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
-      .select(col(armCol).cast("string").as("arm"),
-        col(flagCol).cast("boolean").as("flag"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_seqab_state")
-    val ck = tempDir("graft_seqab_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
+    val source = abSource(outcomes, armCol, flagCol)
     // AvailableNow foreachBatch runs looks sequentially; a plain map
     // under its own lock is enough
     val minP = scala.collection.mutable.Map.empty[String, Double]
     val looks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("arm",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("flag",
-          org.apache.spark.sql.types.BooleanType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy("arm")
-            .agg(count(col("flag")).as("n"),
-              sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("arm")
-              .agg(sum(col("n")).cast("long").as("n"),
-                sum(col("n_pass")).cast("long").as("n_pass"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-          // THE LOOK: always-valid p off the cumulative counts,
-          // folded into the running per-arm minimum
-          looks.incrementAndGet()
-          graft.operators.Experiment.sequentialAbFromCounts(
-              spark.read.parquet(next), controlArm, tau, alpha)
-            .collect().foreach { r =>
-              if (!r.isNullAt(4)) minP.synchronized {
-                val arm = r.getString(0)
-                val p = r.getDouble(4)
-                minP(arm) = math.min(minP.getOrElse(arm, p), p)
+    replay(spark, writeFiles(source)) { (src, out) =>
+      val state = new VersionedState(out)
+      (fileStream(source, src, filesPerTrigger).writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            state.foldIn(armCounts(batch))(foldArmCounts)
+            // THE LOOK: always-valid p off the cumulative counts,
+            // folded into the running per-arm minimum
+            looks.incrementAndGet()
+            graft.operators.Experiment.sequentialAbFromCounts(
+                spark.read.parquet(state.latest.get), controlArm, tau, alpha)
+              .collect().foreach { r =>
+                if (!r.isNullAt(4)) minP.synchronized {
+                  val arm = r.getString(0)
+                  val p = r.getDouble(4)
+                  minP(arm) = math.min(minP.getOrElse(arm, p), p)
+                }
               }
-            }
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replaySequentialAbMonitor saw no micro-batches")
-      val fin = graft.operators.Experiment.sequentialAbFromCounts(
-        spark.read.parquet(state.get()), controlArm, tau, alpha)
-      val minExpr = minP.synchronized {
-        minP.toSeq.sortBy(_._1)
-          .foldLeft(lit(null).cast("double")) { case (e, (a, p)) =>
-            when(col("arm") === a, lit(p)).otherwise(e)
+          },
+        { () =>
+          val fin = graft.operators.Experiment.sequentialAbFromCounts(
+            spark.read.parquet(state.last("replaySequentialAbMonitor")),
+            controlArm, tau, alpha)
+          val minExpr = minP.synchronized {
+            minP.toSeq.sortBy(_._1)
+              .foldLeft(lit(null).cast("double")) { case (e, (a, p)) =>
+                when(col("arm") === a, lit(p)).otherwise(e)
+              }
           }
-      }
-      val withMin = fin.withColumn("min_av_p6", minExpr)
-        .withColumn("ever_crossed",
-          when(col("min_av_p6").isNotNull, col("min_av_p6") <= alpha))
-        .withColumn("n_looks", lit(looks.get().toLong))
-      releaseLastReplay(withMin.orderBy("arm").localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
+          fin.withColumn("min_av_p6", minExpr)
+            .withColumn("ever_crossed",
+              when(col("min_av_p6").isNotNull, col("min_av_p6") <= alpha))
+            .withColumn("n_looks", lit(looks.get().toLong))
+            .orderBy("arm")
+        })
     }
   }
 
@@ -2268,57 +2020,14 @@ object StreamGate {
       ps: Seq[Double],
       k: Int = 1024,
       salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_qsk_src")
-    df.select(col(idCol).cast("long").as("id"),
-        col(valueCol).cast("double").as("v"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_qsk_state")
-    val ck = tempDir("graft_qsk_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.sketchStateOf(
-            batch, "v", "id", k, salt)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => graft.operators.Profile.foldSketchState(
-              spark.read.parquet(p), bh, k)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replaySketchQuantileMonitor saw no micro-batches")
-      releaseLastReplay(graft.operators.Profile.sketchQuantileReport(
-          spark.read.parquet(state.get()), df, valueCol, ps, k)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(
+        df.select(col(idCol).cast("long").as("id"),
+          col(valueCol).cast("double").as("v")),
+        "replaySketchQuantileMonitor", filesPerTrigger)(
+      graft.operators.Profile.sketchStateOf(_, "v", "id", k, salt),
+      graft.operators.Profile.foldSketchState(_, _, k),
+      graft.operators.Profile.sketchQuantileReport(_, df, valueCol, ps, k))
 
   /** Streaming PER-GROUP mergeable-quantile-sketch monitor —
     * [[graft.operators.Profile.sketchStateByGroup]] maintained over a
@@ -2340,60 +2049,16 @@ object StreamGate {
       ps: Seq[Double],
       k: Int = 1024,
       salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_gqsk_src")
-    df.select(col(groupCol).cast("string").as("g"),
-        col(idCol).cast("string").as("id"),
-        col(valueCol).cast("double").as("v"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_gqsk_state")
-    val ck = tempDir("graft_gqsk_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.sketchStateByGroup(
-            batch, "g", "v", "id", k, salt)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => graft.operators.Profile.foldSketchStateByGroup(
-              spark.read.parquet(p), bh, k)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayGroupSketchQuantileMonitor saw no micro-batches")
-      releaseLastReplay(graft.operators.Profile.sketchQuantileReportByGroup(
-          spark.read.parquet(state.get()), df, groupCol, valueCol, ps, k)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(
+        df.select(col(groupCol).cast("string").as("g"),
+          col(idCol).cast("string").as("id"),
+          col(valueCol).cast("double").as("v")),
+        "replayGroupSketchQuantileMonitor", filesPerTrigger)(
+      graft.operators.Profile.sketchStateByGroup(_, "g", "v", "id", k, salt),
+      graft.operators.Profile.foldSketchStateByGroup(_, _, k),
+      graft.operators.Profile.sketchQuantileReportByGroup(
+        _, df, groupCol, valueCol, ps, k))
 
   /** Streaming incremental connected components — [[graft.operators
     * .Components.incrementalComponents]] with the EDGE feed as a file
@@ -2410,62 +2075,31 @@ object StreamGate {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
+      filesPerTrigger: Int = 2): DataFrame = {
     val spark = edges.sparkSession
-    val src = tempDir("graft_edges_src")
-    edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_cc_state")
-    val ck = tempDir("graft_cc_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val prevLabels = Option(state.get()) match {
-            case None => spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("comp",
-                  org.apache.spark.sql.types.LongType))))
-            case Some(p) => spark.read.parquet(p)
-          }
-          val folded = graft.operators.Components
-            .incrementalComponents(prevLabels, batch, "a", "b")
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          folded.write.mode("overwrite").parquet(next)
-          // the write consumed the fold; free the contracted-CC label
-          // checkpoint before the next batch (else blocks accumulate
-          // one generation per micro-batch)
-          graft.operators.Blocks.release(folded)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayIncrementalComponents saw no micro-batches")
-      releaseLastReplay(spark.read.parquet(state.get()).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
+    val source = edges.select(col(srcCol).cast("long").as("a"),
+      col(dstCol).cast("long").as("b"))
+    replay(spark, writeFiles(source)) { (src, out) =>
+      val state = new VersionedState(out)
+      (fileStream(source, src, filesPerTrigger).writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val prevLabels = state.latest match {
+              case None => spark.createDataFrame(
+                java.util.Collections.emptyList[Row](),
+                StructType(Seq(
+                  StructField("node", LongType),
+                  StructField("comp", LongType))))
+              case Some(p) => spark.read.parquet(p)
+            }
+            val folded = graft.operators.Components
+              .incrementalComponents(prevLabels, batch, "a", "b")
+            state.commit(folded)
+            // the write consumed the fold; free the contracted-CC label
+            // checkpoint before the next batch (else blocks accumulate
+            // one generation per micro-batch)
+            graft.operators.Blocks.release(folded)
+          },
+        () => spark.read.parquet(state.last("replayIncrementalComponents")))
     }
   }
 
@@ -2497,53 +2131,18 @@ object StreamGate {
       lo: Double,
       hi: Double,
       eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = current.sparkSession
-    val src = tempDir("graft_drift_src")
-    current.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_drift_state")
-    val ck = tempDir("graft_drift_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(current.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.histogram(batch, c, bins, lo, hi)
-            .select(col("bucket"), col("n"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("bucket").agg(sum(col("n")).as("n"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null, "replayStreamingDrift saw no micro-batches")
-      val refH = graft.operators.Profile.histogram(reference, c, bins, lo, hi)
-        .select(col("bucket"), col("n").as("n_ref"))
-      val curH = spark.read.parquet(state.get())
-        .select(col("bucket"), col("n").as("n_cur"))
-      releaseLastReplay(
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(current, "replayStreamingDrift", filesPerTrigger)(
+      graft.operators.Profile.histogram(_, c, bins, lo, hi)
+        .select(col("bucket"), col("n")),
+      (base, delta) => base.unionByName(delta)
+        .groupBy("bucket").agg(sum(col("n")).as("n")),
+      { state =>
+        val refH = graft.operators.Profile.histogram(reference, c, bins, lo, hi)
+          .select(col("bucket"), col("n").as("n_ref"))
+        val curH = state.select(col("bucket"), col("n").as("n_cur"))
         graft.operators.Profile.psiFromCounts(refH.join(curH, "bucket"), eps)
-          .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      })
 
   /** Streaming CATEGORICAL drift monitor —
     * [[graft.operators.Profile.categoricalDrift]]'s PSI kept current
@@ -2568,55 +2167,19 @@ object StreamGate {
       current: DataFrame,
       c: String,
       eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = current.sparkSession
-    val src = tempDir("graft_catdrift_src")
-    current.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_catdrift_state")
-    val ck = tempDir("graft_catdrift_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(current.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy(col(c).cast("string").as("category"))
-            .agg(count(lit(1)).as("n"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("category").agg(sum(col("n")).as("n"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayCategoricalDrift saw no micro-batches")
-      val refC = reference
-        .groupBy(col(c).cast("string").as("category"))
-        .agg(count(lit(1)).as("n_ref"))
-      val curC = spark.read.parquet(state.get())
-        .select(col("category"), col("n").as("n_cur"))
-      releaseLastReplay(
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState(current, "replayCategoricalDrift", filesPerTrigger)(
+      _.groupBy(col(c).cast("string").as("category"))
+        .agg(count(lit(1)).as("n")),
+      (base, delta) => base.unionByName(delta)
+        .groupBy("category").agg(sum(col("n")).as("n")),
+      { state =>
+        val refC = reference
+          .groupBy(col(c).cast("string").as("category"))
+          .agg(count(lit(1)).as("n_ref"))
+        val curC = state.select(col("category"), col("n").as("n_cur"))
         graft.operators.Profile.categoricalDriftFromCounts(refC, curC, eps)
-          .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      })
 
   /** Streaming semantic decontamination gate —
     * [[graft.operators.Similarity.semanticDecontaminate]] with the
@@ -2647,56 +2210,36 @@ object StreamGate {
       nprobe: Int = 2,
       maxCell: Int = 10000,
       filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = eval.sparkSession
-    val src = tempDir("graft_eval_src")
-    eval.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_semgate_out")
-    val ck = tempDir("graft_semgate_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     // The train corpus and model are FROZEN for this gate's lifetime,
     // so the probe-assigned + guarded train cell table is built and
     // materialized ONCE — before the replay-scoped partition override,
-    // under the session's own parallelism — and every micro-batch
-    // joins the blocks. The previous per-batch semanticDecontaminate
-    // call re-planned (and therefore re-assigned and re-guarded) the
-    // whole train side on every trigger: k cosine scorings of every
-    // train vector per batch for an index that cannot change. A
-    // growing ledger would invalidate this and belongs to the
-    // re-plan-per-batch shape of replayNearDupGate.
+    // under the session's own parallelism (the lock keeps any other
+    // replay's scoped setting out), and before any temp dir
+    // exists (an argument or guard failure here leaves nothing
+    // behind) — and every micro-batch joins the blocks. The previous
+    // per-batch semanticDecontaminate call re-planned (and therefore
+    // re-assigned and re-guarded) the whole train side on every
+    // trigger: k cosine scorings of every train vector per batch for
+    // an index that cannot change. A growing ledger would invalidate
+    // this and belongs to the re-plan-per-batch shape of
+    // replayNearDupGate.
     val np = math.min(nprobe, model.k)
     val index = graft.operators.Similarity.decontaminationIndex(
       train, idCol, vecCol, model, np, maxCell).localCheckpoint()
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(eval.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val sawBatch = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Similarity.decontaminateAgainstIndex(batch,
-              index, idCol, vecCol, model, threshold, np)
-            .write.mode("append").parquet(out)
-          sawBatch.set(true)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      // Same guard as replayCategoricalDrift: an empty eval source fires
-      // zero micro-batches, so nothing is written under `out` and the
-      // read below would die with an obscure schema-inference error
-      // instead of naming the cause.
-      require(sawBatch.get(),
-        "replaySemanticGate saw no micro-batches — empty eval source")
-      releaseLastReplay(spark.read.parquet(out).localCheckpoint())
-    } finally {
-      graft.operators.Blocks.release(index) // the index dies with the gate
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+    val sawBatch = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try replayPerBatch(eval, filesPerTrigger) { batch =>
+        sawBatch.set(true)
+        graft.operators.Similarity.decontaminateAgainstIndex(batch,
+          index, idCol, vecCol, model, threshold, np)
+      } { out =>
+        // Same guard as replayCategoricalDrift: an empty eval source
+        // fires zero micro-batches, so nothing is written under `out`
+        // and the read below would die with an obscure
+        // schema-inference error instead of naming the cause.
+        require(sawBatch.get(),
+          "replaySemanticGate saw no micro-batches — empty eval source")
+        eval.sparkSession.read.parquet(out)
+      }
+    finally graft.operators.Blocks.release(index) // the index dies with the gate
   }
 }

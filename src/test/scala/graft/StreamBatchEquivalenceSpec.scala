@@ -686,14 +686,39 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
+  /** Small inputs for one replay of each shape: stateful parquet sink
+    * (replayDedup), versioned fold state (replayIncrementalRollup) and
+    * per-batch append (replayNearDupGate). */
+  private object ShapeInputs {
+    import graft.operators.{Dedup, Maintain}
+    val rollupSpec = Maintain.SummarySpec(sums = Seq("v"))
+    val facts = table("k string, v decimal(18,2)",
+      (0 until 40).map(i => row(s"k${i % 3}", new java.math.BigDecimal(i))))
+    val shard = table("doc_id bigint, text string", Seq(
+      row(10L, "the quick brown fox jumps"),
+      row(12L, "one two three four five")))
+    val ledger = Dedup.signatureLedger(
+      table("doc_id bigint, text string",
+        Seq(row(1L, "the quick brown fox jumps"))),
+      "doc_id", "text")
+  }
+
+  private def replayOfEachShape(): Seq[() => org.apache.spark.sql.DataFrame] = {
+    import ShapeInputs._
+    Seq(
+      () => StreamGate.replayDedup(events, Seq("user_id"), "1 hour"),
+      () => StreamGate.replayIncrementalRollup(facts, Seq("k"), rollupSpec),
+      () => StreamGate.replayNearDupGate(shard, "doc_id", "text", ledger))
+  }
+
   test("replay gates keep at most one checkpointed result generation live") {
+    val shapes = replayOfEachShape()
+    shapes.foreach(_().count()) // inputs built and every shape warmed
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
-    StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
-    val out = StreamGate.replayDedup(events, Seq("user_id", "event_type"), "1 hour")
-    assert(out.count() > 0)
-    // each replay releases the previous one's checkpoint, so three
-    // replays leave exactly the LAST result's blocks, not three sets
+    // interleave the three shapes: each replay releases the previous
+    // one's checkpoint whatever its shape, so six replays leave exactly
+    // the LAST result's blocks, not one set per replay
+    (shapes ++ shapes.reverse).foreach(r => assert(r().count() > 0))
     val live = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(live.size <= 1,
       s"replays accumulated ${live.size} checkpointed result generations")
@@ -723,15 +748,49 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       try {
         val b = Set.newBuilder[String]
         s.forEach(p => b += p.getFileName.toString)
-        b.result().filter(_.startsWith("graft_stream_"))
+        // StreamGate's temp dirs, whatever their suffix (every replay
+        // runs in one `graft_replay_*` dir)
+        b.result().filter(_.startsWith("graft_"))
       } finally s.close()
     }
-    val before = replayDirs()
-    val out = StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
-    // result must be readable AFTER the sink files are gone
-    assert(out.count() > 0)
-    val leaked = replayDirs() -- before
-    assert(leaked.isEmpty, s"replay left temp dirs behind: $leaked")
+    val key = "spark.sql.shuffle.partitions"
+    // one replay per shape succeeds; the result must be readable AFTER
+    // its temp dir is gone
+    val succeeding = replayOfEachShape().map(r => () => assert(r().count() > 0))
+    // the static-side gates fail an argument guard while building their
+    // frozen index; no temp dir may outlive the failure
+    val failing: Seq[() => Unit] = {
+      import graft.operators.Ivf
+      val bench = table("id bigint, text string",
+        Seq(row(100L, "alpha beta gamma delta epsilon zeta")))
+      val docs = table("id bigint, text string",
+        Seq(row(1L, "x alpha beta gamma delta y")))
+      val vecs = table("vec_id bigint, v array<float>",
+        (0L until 4L).map(i => row(i, Seq(i.toFloat, 1.0f))))
+      val model = Ivf.train(vecs, "vec_id", "v", k = 2, iters = 2, sampleMod = 1)
+      Seq(
+        () => intercept[IllegalArgumentException] {
+          StreamGate.replayExactSubstringGate(docs, "id", "text",
+            bench, "id", "text", minTokens = 1)
+        },
+        () => intercept[IllegalArgumentException] {
+          StreamGate.replaySemanticGate(vecs, vecs, "vec_id", "v", model,
+            threshold = 0.99, nprobe = 0)
+        })
+    }
+    val problems = (succeeding ++ failing).zipWithIndex.flatMap {
+      case (call, i) =>
+        val before = replayDirs()
+        val partitions = spark.conf.get(key)
+        call()
+        val leaked = replayDirs() -- before
+        val after = spark.conf.get(key)
+        (if (leaked.isEmpty) Nil
+          else Seq(s"call $i left temp dirs behind: $leaked")) ++
+          (if (after == partitions) Nil
+            else Seq(s"call $i left $key at $after, was $partitions"))
+    }
+    assert(problems.isEmpty, problems.mkString("; "))
   }
 
   test("stream dedup == batch distinct on the key columns") {
